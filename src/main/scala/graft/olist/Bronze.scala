@@ -1,7 +1,6 @@
 package graft.olist
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** CSV → bronze ingest — the Spark re-expression of
@@ -44,9 +43,7 @@ class Bronze(spark: SparkSession, warehouse: String, audit: Audit) {
     val csv = s"$csvDir/$table.csv"
     try {
       audit.withRun("csv", table, "bronze", table) {
-        val df = readCsv(csv, schema, sep)
-        df.write.mode(SaveMode.Overwrite).parquet(tablePath(table))
-        spark.read.parquet(tablePath(table)).count()
+        WarehouseIo.overwrite(readCsv(csv, schema, sep), tablePath(table))
       }
     } catch {
       case e: Throwable =>
@@ -61,5 +58,5 @@ class Bronze(spark: SparkSession, warehouse: String, audit: Audit) {
       table -> loadOne(csvDir, table, schema, pipe)
     }.toMap
 
-  def table(name: String): DataFrame = spark.read.parquet(tablePath(name))
+  def table(name: String): DataFrame = WarehouseIo.read(spark, tablePath(name))
 }

@@ -1,6 +1,6 @@
 package graft.olist
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
@@ -149,16 +149,14 @@ object Gold {
   /** Gold load in FK dependency order: dims first, fact_orders before
     * fact_order_items/fact_reviews. Overwrite = the reference's
     * DELETE + reseed + INSERT. The dim_date already-loaded guard
-    * (`07:18-22`) is a driver-side existence check. */
+    * (`07:18-22`) is a filesystem existence check plus one aggregate. */
   def run(spark: SparkSession, warehouse: String, audit: Audit): Map[String, Long] = {
     def silver(name: String) = Silver.table(spark, warehouse, name)
-    def write(table: String, df: => DataFrame): (String, Long) = {
-      val rows = audit.withRun("gold-etl", s"silver→$table", "gold", table) {
-        df.write.mode(SaveMode.Overwrite).parquet(s"$warehouse/gold/$table")
-        spark.read.parquet(s"$warehouse/gold/$table").count()
+    def gold(name: String) = table(spark, warehouse, name)
+    def write(table: String, df: => DataFrame, options: Map[String, String] = Map.empty): (String, Long) =
+      table -> audit.withRun("gold-etl", s"silver→$table", "gold", table) {
+        WarehouseIo.overwrite(df, s"$warehouse/gold/$table", options)
       }
-      table -> rows
-    }
     /** Fact writes are READ-OPTIMIZED: REBALANCE evens the output
       * files (the upstream join leaves skewed post-shuffle partitions
       * — a 30M-order run produced a 5:1 file-size spread without it),
@@ -169,49 +167,42 @@ object Gold {
       * sized for ~row-group-level cardinality at the 100 TB bar and
       * merely over-allocates a few KB per group below it.
       * graft.tools.ScaleSkipProbe measures the resulting skip ratio. */
-    def writeFact(table: String, keyCol: String, df: => DataFrame): (String, Long) = {
-      val rows = audit.withRun("gold-etl", s"silver→$table", "gold", table) {
-        df.hint("rebalance")
-          .write.mode(SaveMode.Overwrite)
-          .option(s"parquet.bloom.filter.enabled#$keyCol", "true")
-          .option(s"parquet.bloom.filter.expected.ndv#$keyCol", "4000000")
-          .parquet(s"$warehouse/gold/$table")
-        spark.read.parquet(s"$warehouse/gold/$table").count()
-      }
-      table -> rows
-    }
-    val dimDatePath = s"$warehouse/gold/dim_date"
+    def writeFact(table: String, keyCol: String, df: => DataFrame): (String, Long) =
+      write(table, df.hint("rebalance"), Map(
+        s"parquet.bloom.filter.enabled#$keyCol" -> "true",
+        s"parquet.bloom.filter.expected.ndv#$keyCol" -> "4000000"))
     // cheap filesystem probe first: asking Spark to read a missing path
-    // just to catch the exception logs a noisy stack on every cold run
-    val dimDateLoaded = new java.io.File(dimDatePath).exists() && {
-      try spark.read.parquet(dimDatePath).filter(col("date_key") =!= 19000101).limit(1).count() > 0
-      catch { case _: Throwable => false }
+    // just to catch the exception logs a noisy stack on every cold run.
+    // One aggregate answers both guard questions: is a real calendar
+    // loaded, and how many rows does the table hold.
+    val loadedDimDate: Option[Long] =
+      if (!new java.io.File(s"$warehouse/gold/dim_date").exists()) None
+      else try {
+        val r = gold("dim_date")
+          .agg(count(lit(1)), count(when(col("date_key") =!= 19000101, 1))).head()
+        if (r.getLong(1) > 0) Some(r.getLong(0)) else None
+      } catch { case _: Throwable => None }
+    val dateResult = loadedDimDate match {
+      // guard: skip rebuild (07:18-22) but report the real existing row
+      // count — a -1 sentinel in a row-count map misleads the audit consumers
+      case Some(rows) => "dim_date" -> rows
+      case None => write("dim_date", dimDate(spark))
     }
-    val dateResult =
-      if (dimDateLoaded)
-        // guard: skip rebuild (07:18-22) but report the real existing row
-        // count (cheap: parquet footer metadata, no data scan) — a -1
-        // sentinel in a row-count map misleads the audit consumers
-        Seq("dim_date" -> spark.read.parquet(dimDatePath).count())
-      else Seq(write("dim_date", dimDate(spark)))
 
-    val results = dateResult ++ Seq(
+    val results = Seq(dateResult,
       write("dim_customer", dimCustomer(silver("customers"))),
       write("dim_product", dimProduct(silver("products"))),
       write("dim_seller", dimSeller(silver("sellers"))),
-      writeFact("fact_orders", "order_id", factOrders(silver("orders"),
-        spark.read.parquet(s"$warehouse/gold/dim_customer"))),
+      writeFact("fact_orders", "order_id", factOrders(silver("orders"), gold("dim_customer"))),
       writeFact("fact_order_items", "order_id", factOrderItems(silver("order_items"),
-        spark.read.parquet(s"$warehouse/gold/fact_orders"),
-        spark.read.parquet(s"$warehouse/gold/dim_product"),
-        spark.read.parquet(s"$warehouse/gold/dim_seller"))),
+        gold("fact_orders"), gold("dim_product"), gold("dim_seller"))),
       // fact_reviews drops the order natural key (it carries order_sk);
       // its point-lookup key is review_id
       writeFact("fact_reviews", "review_id", factReviews(silver("order_reviews"),
-        spark.read.parquet(s"$warehouse/gold/fact_orders"))))
+        gold("fact_orders"))))
     results.toMap
   }
 
   def table(spark: SparkSession, warehouse: String, name: String): DataFrame =
-    spark.read.parquet(s"$warehouse/gold/$name")
+    WarehouseIo.read(spark, s"$warehouse/gold/$name")
 }

@@ -8,7 +8,9 @@ import org.apache.spark.sql.types._
   * (`01_create_database_and_schemas.sql:71`, `02_create_tables_bronze.sql:22-108`):
   * every column StringType so ingest can never fail on bad data; typing is
   * applied bronze→silver via try_* casts (`04_create_silver_tables.sql:14-20`).
-  * Nothing is ever schema-inferred.
+  * Nothing is ever schema-inferred: bronze CSVs are read with these
+  * schemas, and silver/gold tables with the schema Spark stored in their
+  * own parquet footers (`WarehouseIo.read`).
   */
 object Schemas {
 

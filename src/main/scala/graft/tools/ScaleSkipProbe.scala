@@ -41,7 +41,7 @@ object ScaleSkipProbe {
 
     val factDir = s"$warehouse/gold/fact_orders"
     // deterministic probe keys: spread across the id space by md5 rank
-    val probes = spark.read.parquet(factDir).select(col("order_id"))
+    val probes = graft.olist.Gold.table(spark, warehouse, "fact_orders").select(col("order_id"))
       .orderBy(md5(col("order_id"))).limit(nProbes)
       .collect().map(_.getString(0))
 

@@ -132,14 +132,30 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("audit trail records STARTED and SUCCESS events per load") {
-    val (wh, _) = result
-    val audit = new Audit(spark, wh)
-    val summary = audit.runSummary().cache()
-    assert(summary.filter(col("status") === "SUCCESS").count() >= 16) // 9 bronze + 9 silver - dim guard
-    assert(summary.filter(col("status") === "FAILED").count() == 0)
-    val silverOrders = summary.filter(
-      col("target_schema") === "silver" && col("target_table") === "orders").head()
-    assert(silverOrders.getAs[Long]("rows_inserted") == 4)
+    // own warehouse: checked after the first run and again after the
+    // idempotent re-run, whose events add to the first run's
+    val csvDir = tempDir("olist-audit-csv")
+    Fixtures.writeAll(csvDir)
+    val wh = tempDir("olist-audit-wh")
+    Seq("first run", "re-run").foreach { pass =>
+      val r = Orchestrator.runAll(spark, csvDir, wh)
+      val summary = new Audit(spark, wh).runSummary().cache()
+      assert(summary.filter(col("status") === "SUCCESS").count() >= 16) // 9 bronze + 9 silver - dim guard
+      assert(summary.filter(col("status") === "FAILED").count() == 0)
+      val silverOrders = summary.filter(
+        col("target_schema") === "silver" && col("target_table") === "orders").head()
+      assert(silverOrders.getAs[Long]("rows_inserted") == 4)
+      // the count taken during each write is the written table's count
+      // and the count the pipeline reports
+      val reported = Map("bronze" -> r.bronzeRows, "silver" -> r.silverRows, "gold" -> r.goldRows)
+      summary.filter(col("status") === "SUCCESS").collect().foreach { run =>
+        val (layer, table) = (run.getAs[String]("target_schema"), run.getAs[String]("target_table"))
+        val rows = run.getAs[Long]("rows_inserted")
+        assert(rows == WarehouseIo.read(spark, s"$wh/$layer/$table").count(), s"$pass: $layer.$table")
+        assert(rows == reported(layer)(table), s"$pass: $layer.$table")
+      }
+      summary.unpersist()
+    }
   }
 
   test("fail-fast: a poisoned silver load aborts and audits FAILED") {

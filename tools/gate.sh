@@ -36,6 +36,12 @@ if [ $rc -ne 0 ]; then
   echo "sbt test FAILED — aborting gate chain (later gates are meaningless)"
   exit 1
 fi
+echo "=== PERFBENCH UNIT TESTS ==="
+python3 -m unittest discover -s perfbench -p 'test_*.py' > /tmp/${TAG}_perfbench_unit.log 2>&1
+step "perfbench unittest" $?
+echo "=== PERFBENCH REFRESH (QA, idempotence and audit-SUCCESS checks) ==="
+python3 perfbench/run.py --workload olist-refresh --seed 1 --seconds 40 --trace 0 > /tmp/${TAG}_perfbench_refresh.log 2>&1
+step "perfbench refresh" $?
 echo "=== VERIFY CPUS=32 ==="
 SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/verify_${TAG}_t32" > /tmp/${TAG}_verify32.log 2>&1
 step "verify32" $?
