@@ -2,6 +2,7 @@ package graft.olist
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
+import scala.util.control.NonFatal
 
 /** CSV → bronze ingest — the Spark re-expression of
   * `etl.sp_bulk_load_bronze` (`03_load_csv_to_bronze.sql:15-75`) and its 9
@@ -37,7 +38,8 @@ class Bronze(spark: SparkSession, warehouse: String, audit: Audit) {
   def tablePath(table: String): String = s"$warehouse/bronze/$table"
 
   /** Load one CSV into its bronze parquet table (truncate+insert =
-    * overwrite), audited. Returns rows loaded; -1 on (non-fatal) failure. */
+    * overwrite), audited. Returns rows loaded; -1 on a non-fatal failure
+    * (a fatal error or an interrupt propagates). */
   def loadOne(csvDir: String, table: String, schema: StructType, pipe: Boolean): Long = {
     val sep = if (pipe) "|" else ","
     val csv = s"$csvDir/$table.csv"
@@ -46,9 +48,8 @@ class Bronze(spark: SparkSession, warehouse: String, audit: Audit) {
         WarehouseIo.overwrite(readCsv(csv, schema, sep), tablePath(table))
       }
     } catch {
-      case e: Throwable =>
-        // bronze failures don't cascade (reference has no THROW here)
-        -1L
+      // bronze failures don't cascade (reference has no THROW here)
+      case NonFatal(_) => -1L
     }
   }
 

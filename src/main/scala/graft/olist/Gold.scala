@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
+import scala.util.control.NonFatal
 import Functions._
 
 /** Silver → gold star-schema build (the Spark re-expression of
@@ -181,7 +182,7 @@ object Gold {
         val r = gold("dim_date")
           .agg(count(lit(1)), count(when(col("date_key") =!= 19000101, 1))).head()
         if (r.getLong(1) > 0) Some(r.getLong(0)) else None
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
     val dateResult = loadedDimDate match {
       // guard: skip rebuild (07:18-22) but report the real existing row
       // count — a -1 sentinel in a row-count map misleads the audit consumers

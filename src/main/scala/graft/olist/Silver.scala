@@ -28,9 +28,13 @@ object Silver {
   private def withLineage(df: DataFrame, src: String): DataFrame =
     lineage(src).foldLeft(df) { case (d, (n, c)) => d.withColumn(n, c) }
 
-  /** Fail-fast NOT NULL enforcement (mirrors the DDL constraint firing). */
+  /** Fail-fast NOT NULL enforcement (mirrors the DDL constraint firing),
+    * checked before the write so a violation leaves the previous table in
+    * place. A count rather than `limit(1)`: Spark numbers a LIMIT's
+    * generated counter JVM-wide, so a LIMIT plan compiles anew on every
+    * refresh, while an aggregate's code is reused from the cache. */
   private def requireNoNulls(df: DataFrame, table: String, cols: Seq[String]): DataFrame = {
-    val bad = df.filter(cols.map(col(_).isNull).reduce(_ || _)).limit(1).count()
+    val bad = df.filter(cols.map(col(_).isNull).reduce(_ || _)).count()
     if (bad > 0) throw new IllegalStateException(
       s"silver.$table: NOT NULL violation in columns ${cols.mkString(",")}")
     df

@@ -8,6 +8,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types.{DataType, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Warehouse table I/O shared by every layer: the only place a layer
   * table is written or read back.
@@ -41,17 +42,32 @@ object WarehouseIo {
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(footerSchema(spark, path)).parquet(path)
 
+  /** Rows in the table at `path`: the row-group row counts of its
+    * parquet footers, summed on the driver, so a volumetry check costs
+    * no Spark job. */
+  def rows(spark: SparkSession, path: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    dataFiles(spark, path).map { file =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+      try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum finally reader.close()
+    }.sum
+  }
+
+  /** The table's visible data files; names starting with '_' or '.' are
+    * commit markers, checksums and temp files, which Spark skips too. */
+  private def dataFiles(spark: SparkSession, path: String): Seq[Path] = {
+    val dir = new Path(path)
+    val files = dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir).toSeq
+      .map(_.getPath)
+      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith(".") &&
+        p.getName.endsWith(".parquet"))
+    if (files.isEmpty) throw new IllegalStateException(s"$path: no parquet data file")
+    files
+  }
+
   private def footerSchema(spark: SparkSession, path: String): StructType = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
-    // the first visible data file; names starting with '_' or '.' are
-    // commit markers, checksums and temp files, which Spark skips too
-    val file = fs.listStatus(dir).iterator
-      .map(_.getPath)
-      .find(p => !p.getName.startsWith("_") && !p.getName.startsWith(".") &&
-        p.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(s"$path: no parquet data file"))
+    val file = dataFiles(spark, path).head
     val options = HadoopReadOptions.builder(conf)
       .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build()
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf), options)

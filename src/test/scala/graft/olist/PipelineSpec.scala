@@ -8,6 +8,11 @@ import org.apache.spark.sql.functions._
   * PKs) and idempotent re-run semantics. */
 class PipelineSpec extends SparkTestBase {
 
+  // A re-run of the fixture pipeline compiles 18 classes, 23 when the
+  // dim_date guard's aggregate is new to the JVM; a codegen cache too
+  // small to hold one refresh's classes recompiles nearly all of them (195).
+  private val WarmCompileBound = 40
+
   private lazy val result: (String, Orchestrator.PipelineResult) = {
     val csvDir = tempDir("olist-e2e-csv")
     Fixtures.writeAll(csvDir)
@@ -156,6 +161,31 @@ class PipelineSpec extends SparkTestBase {
       }
       summary.unpersist()
     }
+  }
+
+  test("warm refresh: a re-run reuses the compiled code of the first run") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val csvDir = tempDir("olist-warm-csv")
+    Fixtures.writeAll(csvDir)
+    val wh = tempDir("olist-warm-wh")
+    Orchestrator.runAll(spark, csvDir, wh)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    Orchestrator.runAll(spark, csvDir, wh)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    // what is left is silver's current_timestamp() lineage, which Spark
+    // folds into a new literal in the generated code on every run
+    assert(compiles <= WarmCompileBound, s"$compiles classes compiled by the re-run")
+  }
+
+  test("bronze: a fatal error in a load is not swallowed") {
+    val csvDir = tempDir("olist-fatal-csv")
+    Fixtures.writeAll(csvDir)
+    val wh = tempDir("olist-fatal-wh")
+    val interrupted = new Audit(spark, wh) {
+      override def withRun(srcSys: String, srcObj: String, tgtSchema: String, tgtTable: String)
+                          (load: => Long): Long = throw new InterruptedException("stop")
+    }
+    intercept[InterruptedException](new Bronze(spark, wh, interrupted).loadAll(csvDir))
   }
 
   test("fail-fast: a poisoned silver load aborts and audits FAILED") {

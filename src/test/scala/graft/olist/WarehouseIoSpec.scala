@@ -39,6 +39,17 @@ class WarehouseIoSpec extends SparkTestBase {
     assert(WarehouseIo.read(spark, path).dtypes.toSeq == sample.dtypes.toSeq)
   }
 
+  test("rows sums the footer row counts, without a Spark job") {
+    val path = s"${tempDir("wio-rows")}/t"
+    WarehouseIo.overwrite(sample.filter(lit(false)), path)
+    assert(jobsLaunchedBy(assert(WarehouseIo.rows(spark, path) == 0)) == 0)
+    assert(WarehouseIo.read(spark, path).count() == 0)
+    WarehouseIo.overwrite(spark.range(0, 1000, 1, 4).select(col("id")), path)
+    assert(new java.io.File(path).listFiles().count(_.getName.endsWith(".parquet")) == 4)
+    assert(jobsLaunchedBy(assert(WarehouseIo.rows(spark, path) == 1000)) == 0)
+    assert(WarehouseIo.read(spark, path).count() == 1000)
+  }
+
   test("table accessors launch no Spark job") {
     val wh = tempDir("wio-wh")
     Seq("bronze/olist_orders", "silver/orders", "gold/fact_orders")

@@ -42,6 +42,9 @@ step "perfbench unittest" $?
 echo "=== PERFBENCH REFRESH (QA, idempotence and audit-SUCCESS checks) ==="
 python3 perfbench/run.py --workload olist-refresh --seed 1 --seconds 40 --trace 0 > /tmp/${TAG}_perfbench_refresh.log 2>&1
 step "perfbench refresh" $?
+echo "=== PERFBENCH TRACED REFRESH (the same checks with each layer called and traced) ==="
+python3 perfbench/run.py --workload olist-refresh --seed 1 --seconds 40 --trace 1 > /tmp/${TAG}_perfbench_refresh_traced.log 2>&1
+step "perfbench traced refresh" $?
 echo "=== VERIFY CPUS=32 ==="
 SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/verify_${TAG}_t32" > /tmp/${TAG}_verify32.log 2>&1
 step "verify32" $?
